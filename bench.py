@@ -47,6 +47,7 @@ import os
 import statistics
 import sys
 import time
+from collections.abc import Mapping
 from pathlib import Path
 
 import duckdb
@@ -56,11 +57,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent / "scripts"))
 
 from _provenance import provenance  # noqa: E402
 
-from product_data_pipelining_spark.io import TPCH_TABLES
+from product_data_pipelining_spark.io import TPCH_TABLES, _table_bytes
 from product_data_pipelining_spark.registry import all_queries
 from product_data_pipelining_spark.session import get_spark
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 1 = skip the in-process DuckDB baseline entirely (duckdb_total_sec = 0,
 # ratio_vs_duckdb = null). Used by the CPU strong-scaling probe, which
@@ -91,17 +93,7 @@ def _sized_shuffle_partitions(sf_dir: str) -> str:
     sized from the SF dir's bytes (~64 MB per partition, floor 8, cap at
     the core count) so the sf0.1 posture (8) doesn't serialize 50x data
     through 8-way exchanges when the probe reuses this harness."""
-    total = 0
-    try:
-        for root, _dirs, files in os.walk(sf_dir):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-    except OSError:
-        pass
-    return str(min(CPUS, max(8, total // (64 * 1024 * 1024))))
+    return str(min(CPUS, max(8, _table_bytes(sf_dir) // (64 * 1024 * 1024))))
 
 
 os.environ.setdefault(
@@ -196,6 +188,25 @@ if _ONLY:
 
 REPEATS = int(_REPEATS_ENV) if _REPEATS_ENV else 5  # spark: median of N full (plan + execute) runs
 DUCK_REPEATS = REPEATS  # duckdb: same sample count for the oracle SQL
+
+
+def mirror_target(env: Mapping[str, str]) -> str | None:
+    """Where main() mirrors its JSON line, or None for no mirror.
+
+    An explicit SPARK_GRAFT_BENCH_MIRROR path wins ("0" or "" disables).
+    By default only a full-HEADLINE run at DEFAULT_SF_DIR refreshes the
+    committed BENCH_LAST.json: a SPARK_GRAFT_ONLY subset or another SF
+    dir would otherwise overwrite the headline line with a partial one.
+    """
+    if "SPARK_GRAFT_BENCH_MIRROR" in env:
+        mirror = env["SPARK_GRAFT_BENCH_MIRROR"]
+        return None if mirror in ("", "0") else mirror
+    sf_dir = env.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    if env.get("SPARK_GRAFT_ONLY") or (
+        os.path.realpath(sf_dir) != os.path.realpath(DEFAULT_SF_DIR)
+    ):
+        return None
+    return str(Path(__file__).resolve().parent / "BENCH_LAST.json")
 
 
 def _duck_connect() -> duckdb.DuckDBPyConnection:
@@ -348,14 +359,9 @@ def main() -> None:
     # line outgrew that window — `BENCH_r11.json parsed: null` orphaned
     # the whole round-over-round comparison. The mirror is written from
     # the SAME string in the SAME run, so a truncated tail can always be
-    # reconciled from the committed file. Probes that re-drive bench.py
-    # at other SFs may point the mirror elsewhere (or at /dev/null-like
-    # "0" to disable) so they don't clobber the headline mirror.
-    mirror = os.environ.get(
-        "SPARK_GRAFT_BENCH_MIRROR",
-        str(Path(__file__).resolve().parent / "BENCH_LAST.json"),
-    )
-    if mirror not in ("", "0"):
+    # reconciled from the committed file.
+    mirror = mirror_target(os.environ)
+    if mirror:
         try:
             with open(mirror, "w") as f:
                 f.write(line + "\n")

@@ -82,6 +82,32 @@ def parallelize_scan(df: DataFrame, force: bool = False) -> DataFrame:
 # 100 TB path relies on.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
+# Live cached state that a returned lazy DataFrame still references — a
+# query block / codebook broadcast, or a persisted frame — keyed by
+# (id(SparkContext), tag). It must outlive the function that builds it,
+# so it can't be released there; each new run releases its predecessor
+# under the same key instead, and repeated bench passes hold ONE live
+# copy per key.
+# Keying by context id means state held under a stopped context is never
+# touched after a restart.
+_LIVE: dict = {}
+
+
+def swap_live(key, make):
+    """Release the object held under ``key``, then hold and return
+    ``make()``: a new Broadcast, or a frame's bound ``persist``.
+
+    The release must come first. A re-run builds a frame with the same
+    plan, and persisting it while the old copy is cached reuses the old
+    cache entry, which the release then drops. unpersist, not destroy:
+    an earlier run's lazy frame may still reference the old copy, which
+    then just re-ships (or recomputes) on use."""
+    prev = _LIVE.pop(key, None)
+    if prev is not None:
+        prev.unpersist(blocking=False)
+    _LIVE[key] = obj = make()
+    return obj
+
 
 # only spread a cached table across the cluster when it is big enough
 # that single-partition compute would dominate; smaller tables stay one

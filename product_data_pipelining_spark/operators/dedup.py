@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table, parallelize_scan
+from ..io import load_table, parallelize_scan, swap_live
 from ..functions.rounding import duck_round
 from ..registry import register
 from .textops import tokens
@@ -160,12 +160,12 @@ def signature_from_shingles(
         #   adjacent-process legs whose DuckDB baseline itself drifted
         #   330->246 s.
         # - r13 A/B'd both arms in ONE process at sf10 with alternating
-        #   reps and plan-sanity checks (scripts/r13_minhash_ab.py,
-        #   BENCH_R13_MINHASH_AB_SF10/SF01.json): the numeric arm is
-        #   2.50x SLOWER on the pure signature build (dd03 2.24 vs
-        #   5.61 s) and 1.47x slower on dd14 at sf10, a tie on
-        #   dd04/pipe02 where LSH work dominates — and the gap GROWS
-        #   with scale (dd03 1.37x at sf0.1 -> 2.50x at sf10): eight
+        #   reps and plan-sanity checks (BENCH_R13_MINHASH_AB_SF10/SF01.json,
+        #   measured by scripts/r13_minhash_ab.py at 75d5d2c): the
+        #   numeric arm is 2.64x SLOWER on the pure signature build
+        #   (dd03 2.10 vs 5.54 s) and 1.41x slower on dd14 at sf10, a
+        #   tie on dd04/pipe02 where LSH work dominates — and the gap
+        #   GROWS with scale (dd03 2.39x at sf0.1 -> 2.64x at sf10): eight
         #   conv() string parses + decimal(20,0) buffers per exploded
         #   shingle cost more than the sort they remove, and scale
         #   amplifies the linear parse term faster than the sort's log
@@ -1168,36 +1168,10 @@ def dd13_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     widens with N (DuckDB's within-cell pairing is a single-threaded
     nested-loop per cell).
     """
-    from .similarity import (
-        CENT_STRIDE,
-        _LIVE_QUERY_BLOCK,
-        centroid_budget,
-        corpus_size,
-        swap_live_persisted,
-    )
+    from .similarity import centroid_block
 
     emb = load_table(spark, sf_dir, "embeddings")
-    k = centroid_budget(corpus_size(spark, sf_dir))
-    cent_rows = (
-        emb.filter(
-            (F.col("vec_id") % CENT_STRIDE == 7)
-            & (F.col("vec_id") < CENT_STRIDE * k)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded by MAX_CENTROIDS (codebook, never corpus)
-    )
-    cent_rows.sort(key=lambda r: r.vec_id)
-    bkey = (id(spark.sparkContext), "dd13")
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    c_block = spark.sparkContext.broadcast(
-        (
-            [int(r.vec_id) for r in cent_rows],
-            [list(map(float, r.embedding)) for r in cent_rows],
-        )
-    )
-    _LIVE_QUERY_BLOCK[bkey] = c_block
+    c_block = centroid_block(spark, sf_dir, emb, "dd13")
 
     def assign(batches):
         # nested closure: pickled by value, workers don't need the repo
@@ -1257,17 +1231,17 @@ def dd13_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.floor(a, out=a)
             s6 = (a * np.sign(sims)).astype(np.int64)
             # ascending packed key (-s6, centroid index); index order
-            # IS cent_id order (sorted above), matching the oracle's
+            # IS cent_id order (centroid_block sorts), matching the oracle's
             # (sim DESC, cent_id ASC) ranking
             keym = (np.int64(1_000_000) - s6) * pow2 + idx_arr
             bestc = np.argmin(keym, axis=1)
             yield pd.DataFrame({"vec_id": vid, "cell": cid[bestc]})
 
-    asg = swap_live_persisted(
+    asg = swap_live(
         (id(spark.sparkContext), "dd13_asg"),
         emb.select("vec_id", "embedding").mapInPandas(
             assign, "vec_id long, cell long"
-        ),
+        ).persist,
     )  # consumed by the gate, the pair stage, and the final output
     # occupancy gate BEFORE pairing (dd04's max_bucket shape): an
     # over-full cell never reaches the O(occ^2) kernel, singletons

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ..io import broadcast_or_shuffle_hash, load_table
+from ..io import broadcast_or_shuffle_hash, load_table, swap_live
 from ..functions.rounding import (
     _scaled_long,
     det_avg,
@@ -537,11 +537,7 @@ def a03_percentile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |groups|-bounded frame (calendar x returnflag rows, never
     # SF-proportional) collapses the plan to the documented three fact
     # scans: one for g, two for nn (histogram + candidate passes).
-    from .similarity import swap_live_persisted
-
-    # keyed by (context id, tag) like sim09/dd13 so a frame cached under
-    # a stopped SparkContext is never unpersisted after a restart
-    g = swap_live_persisted((id(spark.sparkContext), "a03_g"), g)
+    g = swap_live((id(spark.sparkContext), "a03_g"), g.persist)
     gstats = g.select("returnflag", "_d", "_n", "_vmin", "_vmax")
 
     def pos_of(q: float):

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table, parallelize_scan
+from ..io import load_table, parallelize_scan, swap_live
 from ..functions.rounding import (
     _scaled_long,
     _sql_scaled_long,
@@ -32,23 +32,6 @@ QUERY_STRIDE = 50  # vec_id % 50 == 0 rows act as the query set
 # scales with the corpus" into a loud error instead of driver OOM.
 # 65536 queries x 64 f64 dims = 32 MiB, comfortably broadcastable.
 MAX_QUERY_BLOCK = 65536
-# Last sim01 query-block broadcast per SparkContext (keyed by id()):
-# lets each invocation release the previous run's executor copies.
-_LIVE_QUERY_BLOCK: dict = {}
-# Sibling registry for PERSISTED DataFrames (sim09's assignment, dd13's):
-# a returned lazy frame must outlive its builder, so each new invocation
-# unpersists the previous run's cached copy instead — repeated bench
-# passes hold exactly ONE live cached frame per (context, tag).
-_LIVE_PERSISTED: dict = {}
-
-
-def swap_live_persisted(key, df):
-    """Persist ``df`` and release the previous frame cached under ``key``."""
-    prev = _LIVE_PERSISTED.pop(key, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    _LIVE_PERSISTED[key] = df.persist()
-    return df
 NEARDUP_COSINE = 0.4
 LSH_BITS = 4  # sign bits of the first 4 dims form the bucket
 CENT_STRIDE = 83  # vec_id % 83 == 7 rows act as IVF seed centroids
@@ -139,6 +122,45 @@ def centroid_filter(spark: SparkSession, sf_dir: str) -> Column:
     return (F.col("vec_id") % CENT_STRIDE == 7) & (
         F.col("vec_id") < CENT_STRIDE * k
     )
+
+
+def _vector_block(spark: SparkSession, tag: str, rows: list):
+    """Broadcast (vec_id, embedding) rows as ([vec_id], [vector]), held
+    live under ``tag`` (io.swap_live: one live copy per context)."""
+    block = (
+        [int(r.vec_id) for r in rows],
+        [list(map(float, r.embedding)) for r in rows],
+    )
+    return swap_live(
+        (id(spark.sparkContext), tag), lambda: spark.sparkContext.broadcast(block)
+    )
+
+
+def centroid_block(spark: SparkSession, sf_dir: str, emb: DataFrame, tag: str):
+    """The seed centroids as a live ``_vector_block`` in vec_id order.
+    Bounded by the sqrt-N budget: a codebook, never corpus-proportional."""
+    rows = emb.filter(centroid_filter(spark, sf_dir)).select(
+        "vec_id", "embedding"
+    ).collect()
+    rows.sort(key=lambda r: r.vec_id)
+    return _vector_block(spark, tag, rows)
+
+
+def _query_rows(emb: DataFrame, query: str) -> list:
+    """The stride-selected query batch, refused past MAX_QUERY_BLOCK."""
+    rows = (
+        emb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
+        .select("vec_id", "embedding")
+        .limit(MAX_QUERY_BLOCK + 1)  # bound the transfer, not just the check
+        .collect()
+    )
+    if len(rows) > MAX_QUERY_BLOCK:
+        raise ValueError(
+            f"{query} query block exceeds MAX_QUERY_BLOCK={MAX_QUERY_BLOCK}; "
+            "a query batch must be bounded independent of corpus size — "
+            "shard the batch or raise the cap deliberately"
+        )
+    return rows
 
 
 def _dbl(col: Column) -> Column:
@@ -296,34 +318,8 @@ def sim01_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions only multiply Python-worker round-trips at small SF (at
     # 100 TB the scan is already thousands of splits and heal is a no-op)
     emb = load_table(spark, sf_dir, "embeddings")
-    q_rows = (
-        emb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select("vec_id", "embedding")
-        .limit(MAX_QUERY_BLOCK + 1)  # bound the transfer, not just the check
-        .collect()
-    )
-    if len(q_rows) > MAX_QUERY_BLOCK:
-        raise ValueError(
-            f"sim01 query block exceeds MAX_QUERY_BLOCK={MAX_QUERY_BLOCK}; "
-            "a query batch must be bounded independent of corpus size — "
-            "shard the batch or raise the cap deliberately"
-        )
-    # The broadcast must outlive this function (the returned DataFrame is
-    # lazy), so it can't be unpersisted here. Instead each new invocation
-    # releases the previous one's executor copies: accumulation across
-    # repeated runs (bench loops) is capped at ONE live sim01 broadcast
-    # per SparkContext, and the driver-side value is bounded by
-    # MAX_QUERY_BLOCK regardless.
-    prev = _LIVE_QUERY_BLOCK.pop(id(spark.sparkContext), None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    q_block = spark.sparkContext.broadcast(
-        (
-            [int(r.vec_id) for r in q_rows],
-            [list(map(float, r.embedding)) for r in q_rows],
-        )
-    )
-    _LIVE_QUERY_BLOCK[id(spark.sparkContext)] = q_block
+    # the driver-side value is bounded by MAX_QUERY_BLOCK
+    q_block = _vector_block(spark, "sim01", _query_rows(emb, "sim01"))
 
     top_k = TOP_K
 
@@ -594,29 +590,17 @@ def sim02x_ann_lsh_bucketed_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned at sf0.001/sf0.01 in tests and held at sf5 when measured.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    q_rows = (
-        emb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select("vec_id", "embedding")
-        .limit(MAX_QUERY_BLOCK + 1)
-        .collect()
-    )
-    if len(q_rows) > MAX_QUERY_BLOCK:
-        raise ValueError(
-            f"sim02x query block exceeds MAX_QUERY_BLOCK={MAX_QUERY_BLOCK}; "
-            "shard the query batch or raise the cap deliberately"
-        )
+    q_rows = _query_rows(emb, "sim02x")
     by_bucket: dict = {}
     for r in q_rows:
         b = "".join("1" if x >= 0 else "0" for x in r.embedding[:LSH_BITS])
         ids, vecs = by_bucket.setdefault(b, ([], []))
         ids.append(int(r.vec_id))
         vecs.append(list(map(float, r.embedding)))
-    key = (id(spark.sparkContext), "sim02x")
-    prev = _LIVE_QUERY_BLOCK.pop(key, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    qb = spark.sparkContext.broadcast(by_bucket)
-    _LIVE_QUERY_BLOCK[key] = qb
+    qb = swap_live(
+        (id(spark.sparkContext), "sim02x"),
+        lambda: spark.sparkContext.broadcast(by_bucket),
+    )
 
     top_k = TOP_K
 
@@ -987,105 +971,9 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell, making each cell's GEMM-able block a partition-local read.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    k = centroid_budget(corpus_size(spark, sf_dir))
-    cent_rows = (
-        emb.filter(
-            (F.col("vec_id") % CENT_STRIDE == 7)
-            & (F.col("vec_id") < CENT_STRIDE * k)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded by MAX_CENTROIDS (codebook, never corpus)
-    )
-    cent_rows.sort(key=lambda r: r.vec_id)
-    bkey = (id(spark.sparkContext), "sim09")
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    c_block = spark.sparkContext.broadcast(
-        (
-            [int(r.vec_id) for r in cent_rows],
-            [list(map(float, r.embedding)) for r in cent_rows],
-        )
-    )
-    _LIVE_QUERY_BLOCK[bkey] = c_block
-
-    nprobe = KNN_NPROBE
-
-    def assign(batches):
-        # nested closure: pickled by value, workers don't need the repo
-        import numpy as np
-        import pandas as pd
-
-        c_ids, c_mat = c_block.value
-        Cm = np.array(c_mat, dtype=np.float64)
-        cid = np.array(c_ids, dtype=np.int64)
-        c_nrm = np.sqrt(
-            np.sum(Cm.astype(np.longdouble) ** 2, axis=1)
-        ).astype(np.float64)
-        Cn = np.ascontiguousarray((Cm / c_nrm[:, None]).T)  # (dim, k)
-        kk = len(cid)
-        pow2 = 1
-        while pow2 < max(kk, 2):
-            pow2 <<= 1
-        idx_arr = np.arange(kk, dtype=np.int64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x_nrm = np.sqrt(
-                np.sum(X.astype(np.longdouble) ** 2, axis=1)
-            ).astype(np.float64)
-            sims = (X / x_nrm[:, None]) @ Cn
-            # duck_round to the 1e-6 grid (the oracle's 6 dp
-            # assignment): in-place half-away passes + longdouble
-            # refinement for boundary-straddling entries (sim01)
-            a = np.abs(sims)
-            a *= 1e6
-            a += 0.5
-            b = np.rint(a)
-            np.subtract(b, a, out=b)
-            np.abs(b, out=b)
-            near = b < 1e-6
-            if near.any():
-                Xl = X.astype(np.longdouble)
-                Cl = Cm.astype(np.longdouble)
-                for i, j in zip(*np.nonzero(near)):
-                    sims[i, j] = np.float64(
-                        np.dot(Xl[i], Cl[j])
-                        / np.longdouble(x_nrm[i] * c_nrm[j])
-                    )
-                av = np.abs(sims[near])
-                av *= 1e6
-                av += 0.5
-                a[near] = av
-            np.floor(a, out=a)
-            s6 = (a * np.sign(sims)).astype(np.int64)
-            # ascending packed key (-s6, centroid index); index order
-            # IS cent_id order (sorted above), matching the oracle's
-            # (sim DESC, cent_id ASC) ranking
-            keym = (np.int64(1_000_000) - s6) * pow2 + idx_arr
-            p = min(nprobe, kk)
-            part = np.argpartition(keym, p - 1, axis=1)[:, :p]
-            rowsrt = np.take_along_axis(keym, part, axis=1).argsort(
-                axis=1, kind="stable"
-            )
-            top = np.take_along_axis(part, rowsrt, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(vid, p),
-                    "cell": cid[top].ravel(),
-                    "crank": np.tile(
-                        np.arange(1, p + 1, dtype=np.int32), len(vid)
-                    ),
-                }
-            )
-
-    ranked = swap_live_persisted(
+    ranked = swap_live(
         (id(spark.sparkContext), "sim09_ranked"),
-        emb.select("vec_id", "embedding").mapInPandas(
-            assign, "vec_id long, cell long, crank int"
-        ),
+        _gemm_cell_ranked(spark, sf_dir, KNN_NPROBE, "sim09").persist,
     )  # consumed by cells AND probes below; lifecycle-tracked (r7 ADVICE)
     v = emb.select("vec_id", "embedding")
     cells = (
@@ -1269,23 +1157,16 @@ def sim05_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         # never corpus-proportional) — the established codebook-fetch
         # pattern (sim09/_gemm_cell_ranked)
         cent_rows.sort(key=lambda r: r.cluster_id)
-        # lifecycle: keyed per Lloyd's round so repeated invocations in
-        # one context hold at most KMEANS_ITERS live codebook broadcasts
-        # — each new run unpersists its round's predecessor (the
-        # _gemm_cell_ranked swap discipline; r10 ADVICE). unpersist, not
-        # destroy: a prior invocation's returned lazy frame may still
-        # reference its broadcast, which then just re-ships on use.
-        bkey = (id(spark.sparkContext), "sim05", rnd)
-        prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-        if prev is not None:
-            prev.unpersist(blocking=False)
-        c_block = spark.sparkContext.broadcast(
-            (
-                [int(r.cluster_id) for r in cent_rows],
-                [list(map(float, r.c_emb)) for r in cent_rows],
-            )
+        block = (
+            [int(r.cluster_id) for r in cent_rows],
+            [list(map(float, r.c_emb)) for r in cent_rows],
         )
-        _LIVE_QUERY_BLOCK[bkey] = c_block
+        # keyed per Lloyd's round: repeated invocations in one context
+        # hold at most KMEANS_ITERS live codebook broadcasts (r10 ADVICE)
+        c_block = swap_live(
+            (id(spark.sparkContext), "sim05", rnd),
+            lambda: spark.sparkContext.broadcast(block),
+        )
 
         def assign(batches):
             # nested closure: pickled by value, workers don't need the
@@ -1816,7 +1697,7 @@ def _gemm_cell_ranked(
 ) -> DataFrame:
     """(vec_id, cell, crank<=nprobe) via one corpus-scan GEMM kernel.
 
-    sim09's assignment stage generalized for the IVF compositions
+    The cell-assignment stage of sim09 and of the IVF compositions
     (sim07/sim08/sim11): the bounded centroid block (k = ceil(sqrt(N)),
     never corpus-proportional) broadcasts once; each Arrow batch runs
     ONE float64-BLAS matmul against it and emits only narrow
@@ -1832,27 +1713,7 @@ def _gemm_cell_ranked(
     verdict); the kernel matches sim09's 0.08x-at-sf10 shape.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    k = centroid_budget(corpus_size(spark, sf_dir))
-    cent_rows = (
-        emb.filter(
-            (F.col("vec_id") % CENT_STRIDE == 7)
-            & (F.col("vec_id") < CENT_STRIDE * k)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded by the sqrt-N budget (codebook, never corpus)
-    )
-    cent_rows.sort(key=lambda r: r.vec_id)
-    bkey = (id(spark.sparkContext), tag)
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    c_block = spark.sparkContext.broadcast(
-        (
-            [int(r.vec_id) for r in cent_rows],
-            [list(map(float, r.embedding)) for r in cent_rows],
-        )
-    )
-    _LIVE_QUERY_BLOCK[bkey] = c_block
+    c_block = centroid_block(spark, sf_dir, emb, tag)
 
     def assign(batches):
         # nested closure: pickled by value, workers don't need the repo
@@ -1880,6 +1741,9 @@ def _gemm_cell_ranked(
                 np.sum(X.astype(np.longdouble) ** 2, axis=1)
             ).astype(np.float64)
             sims = (X / x_nrm[:, None]) @ Cn
+            # duck_round to the 1e-6 grid (the oracle's 6 dp
+            # assignment): in-place half-away passes + longdouble
+            # refinement for boundary-straddling entries (sim01)
             a = np.abs(sims)
             a *= 1e6
             a += 0.5
@@ -1901,6 +1765,9 @@ def _gemm_cell_ranked(
                 a[near] = av
             np.floor(a, out=a)
             s6 = (a * np.sign(sims)).astype(np.int64)
+            # ascending packed key (-s6, centroid index); index order
+            # IS cent_id order (centroid_block sorts), matching the
+            # oracle's (sim DESC, cent_id ASC) ranking
             keym = (np.int64(1_000_000) - s6) * pow2 + idx_arr
             p = min(nprobe, kk)
             part = np.argpartition(keym, p - 1, axis=1)[:, :p]
@@ -1952,14 +1819,11 @@ def _gemm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()  # <= PQ_K rows: codebook, never corpus
     )
     seed_rows.sort(key=lambda r: (int(r.vec_id) - 3) // PQ_STRIDE)
-    bkey = (id(spark.sparkContext), "sim07pq")
-    prev = _LIVE_QUERY_BLOCK.pop(bkey, None)
-    if prev is not None:
-        prev.unpersist(blocking=False)
-    s_block = spark.sparkContext.broadcast(
-        [list(map(float, r.embedding)) for r in seed_rows]
+    seeds = [list(map(float, r.embedding)) for r in seed_rows]
+    s_block = swap_live(
+        (id(spark.sparkContext), "sim07pq"),
+        lambda: spark.sparkContext.broadcast(seeds),
     )
-    _LIVE_QUERY_BLOCK[bkey] = s_block
     pq_m, pq_k, pq_sub = PQ_M, PQ_K, PQ_SUB
     q_stride, q_max = QUERY_STRIDE, PQ_MAX_QUERIES
 
@@ -2053,9 +1917,9 @@ def _ivfpq_scored(
     Spark's per-cell GEMM beats the single-process SQL twin by ~10x
     once the corpus outgrows one box's interpreter throughput.
     """
-    ranked = swap_live_persisted(
+    ranked = swap_live(
         (id(spark.sparkContext), f"sim07_ranked_{nprobe}"),
-        _gemm_cell_ranked(spark, sf_dir, nprobe, f"sim07cent{nprobe}"),
+        _gemm_cell_ranked(spark, sf_dir, nprobe, f"sim07cent{nprobe}").persist,
     )
     codes = _gemm_pq_codes(spark, sf_dir)
     bounded_query = (F.col("vec_id") % QUERY_STRIDE == 0) & (
@@ -2330,9 +2194,9 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must always release the prior one. Same reasoning for the
     # broadcast tag inside _gemm_cell_ranked (the codebook content is
     # nprobe-independent).
-    ranked = swap_live_persisted(
+    ranked = swap_live(
         (id(spark.sparkContext), "sim10_ranked"),
-        _gemm_cell_ranked(spark, sf_dir, nprobe, "sim10cent"),
+        _gemm_cell_ranked(spark, sf_dir, nprobe, "sim10cent").persist,
     )
     v = emb.select("vec_id", "embedding")
     # members: one cell per corpus vector; probes: the bounded query
@@ -2607,9 +2471,9 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang"
     )
-    ranked = swap_live_persisted(
+    ranked = swap_live(
         (id(spark.sparkContext), "sim11_ranked"),
-        _gemm_cell_ranked(spark, sf_dir, NPROBE, "sim11cent"),
+        _gemm_cell_ranked(spark, sf_dir, NPROBE, "sim11cent").persist,
     )
     v = emb.select("vec_id", "embedding")
     members = (

@@ -8,7 +8,7 @@ row-at-a-time Python UDFs — with ONE sanctioned exception since r13:
 the shared tokenize+vocab-count featurization behind tx02/tx03/tx11
 can run as a single ``mapInArrow`` batch pass over ``pyarrow.compute``
 kernels (:func:`_arrow_token_counts`), dispatched by measured corpus
-size and vocabulary-pass count (Arrow wins 0.69–0.81× at sf10 for the
+size and vocabulary-pass count (Arrow wins 0.61–0.75× at sf10 for the
 4-/6-count shapes with bit-equal outputs; the JVM chain stays cheaper
 below the crossover — ``EXP_TEXT_ARROW_SF10.json``,
 ``BENCH_R13_TEXT_AB_SF10.json`` / ``..._SF01.json``).
@@ -60,8 +60,8 @@ def marker_score(toks: Column, markers: tuple[str, ...]) -> Column:
 # job locally (worker round-trip + Arrow transpose), repaid by the
 # split-once batch kernels only when BOTH hold —
 # - enough vocabulary passes share the one split (tx02's 2-count shape
-#   measured 1.35x SLOWER at sf10 even at 500k docs; the 4- and 6-count
-#   shapes win 0.81x / 0.69x there: BENCH_R13_TEXT_AB_SF10.json), and
+#   measured 1.437x SLOWER at sf10 even at 500k docs; the 4- and 6-count
+#   shapes win 0.752x / 0.614x there: BENCH_R13_TEXT_AB_SF10.json), and
 # - enough rows amortize the fixed cost (all shapes lose 1.5-3x at
 #   sf0.1's 5k docs: BENCH_R13_TEXT_AB_SF01.json; the sf1/sf5 legs
 #   bracket the 4-count crossover between 50k docs / 4.3 MB — tx03
@@ -98,7 +98,7 @@ def _arrow_token_counts(
     Measured (one process, alternating arms, bench posture —
     BENCH_R13_TEXT_AB_SF10/SF01.json; isolated featurization kernel in
     EXP_TEXT_ARROW_SF10.json): the Arrow arm wins at sf10 for the
-    multi-vocabulary shapes (tx11 0.69x, tx03 0.81x; isolated kernel
+    multi-vocabulary shapes (tx11 0.614x, tx03 0.752x; isolated kernel
     0.78x over 500k docs) and loses everywhere the fixed per-job
     boundary cost dominates (all shapes at sf0.1; tx02's 2-count shape
     even at sf10). Dispatch is therefore data-sized, not hardcoded:
@@ -110,7 +110,8 @@ def _arrow_token_counts(
 
     Counts are exact integers — bit-identical between the arms (pinned
     frame-equal by test_text_arrow_featurization_matches_jvm_twin, and
-    row-compared over the full sf10 corpus by exp_text_arrow.py) — so
+    row-compared over the full sf10 corpus: EXP_TEXT_ARROW_SF10.json,
+    ``outputs_equal``, from scripts/exp_text_arrow.py at 75cd1b4) — so
     oracle parity does not depend on the dispatch. Emitted count
     columns are INT, matching ``F.size``'s type. ``passthrough``
     columns ride the batch unchanged (md5 fingerprints stay JVM-side:
@@ -275,7 +276,7 @@ def tx02_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # shared featurization helper; the 2-count shape stays on the JVM
     # chain under auto-dispatch (counts < _TEXT_ARROW_MIN_COUNTS: the
-    # Arrow arm measured 1.35x SLOWER even at sf10 — too few vocabulary
+    # Arrow arm measured 1.437x SLOWER even at sf10 — too few vocabulary
     # passes share the one split to repay the Python boundary)
     feats = _arrow_token_counts(
         docs,
@@ -330,7 +331,7 @@ def tx03_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     # all four marker scores in one featurization pass; auto-dispatch
-    # plans the Arrow batch form on big corpora (measured 0.81x at
+    # plans the Arrow batch form on big corpora (measured 0.752x at
     # sf10), the JVM chain on small ones — see _arrow_token_counts
     scored = _arrow_token_counts(
         docs,
@@ -756,7 +757,7 @@ def tx11_corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     # all six token counts in one featurization pass (Arrow batch form
-    # on big corpora — measured 0.69x at sf10 — JVM chain on small
+    # on big corpora — measured 0.614x at sf10 — JVM chain on small
     # ones, see _arrow_token_counts); the md5 fingerprint stays a JVM
     # column computed BEFORE the pass and rides the batch as a
     # passthrough (pyarrow has no md5 kernel, and the oracle pins the

@@ -92,9 +92,10 @@ ARROW_ALLOWED = {
     "sim05_kmeans_assign",
     # r13: the shared tokenize+vocab-count featurization is ONE
     # mapInArrow batch pass (pyarrow.compute split + is_in + cumsum
-    # segment counts) — measured 1.4x over the JVM expression chain on
-    # 500k sf10 documents with bit-equal outputs
-    # (scripts/exp_text_arrow.py); md5 fingerprints stay JVM-side
+    # segment counts) — measured at 0.778x the JVM expression chain on
+    # 500k sf10 documents with bit-equal outputs (EXP_TEXT_ARROW_SF10.json,
+    # from scripts/exp_text_arrow.py at 75cd1b4); md5 fingerprints stay
+    # JVM-side
     "tx02_quality_score",
     "tx03_language_id",
     "tx11_corpus_filter_pipeline",
