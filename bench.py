@@ -194,16 +194,21 @@ def mirror_target(env: Mapping[str, str]) -> str | None:
     """Where main() mirrors its JSON line, or None for no mirror.
 
     An explicit SPARK_GRAFT_BENCH_MIRROR path wins ("0" or "" disables).
-    By default only a full-HEADLINE run at DEFAULT_SF_DIR refreshes the
-    committed BENCH_LAST.json: a SPARK_GRAFT_ONLY subset or another SF
-    dir would otherwise overwrite the headline line with a partial one.
+    By default only a full-HEADLINE run at DEFAULT_SF_DIR, with the
+    DuckDB baseline and the default repeat count, refreshes the committed
+    BENCH_LAST.json: a SPARK_GRAFT_ONLY subset, another SF dir, a skipped
+    baseline (ratio_vs_duckdb null) or fewer repeats would otherwise
+    overwrite the headline line with a partial one.
     """
     if "SPARK_GRAFT_BENCH_MIRROR" in env:
         mirror = env["SPARK_GRAFT_BENCH_MIRROR"]
         return None if mirror in ("", "0") else mirror
     sf_dir = env.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    if env.get("SPARK_GRAFT_ONLY") or (
-        os.path.realpath(sf_dir) != os.path.realpath(DEFAULT_SF_DIR)
+    if (
+        env.get("SPARK_GRAFT_ONLY")
+        or env.get("SPARK_GRAFT_SKIP_DUCKDB", "0") == "1"
+        or env.get("SPARK_GRAFT_REPEATS", "5") not in ("", "5")
+        or os.path.realpath(sf_dir) != os.path.realpath(DEFAULT_SF_DIR)
     ):
         return None
     return str(Path(__file__).resolve().parent / "BENCH_LAST.json")

@@ -11,6 +11,10 @@ off: memoized plans once let an A/B compare an arm with itself.
 Before any timing the run is refused unless, for every query,
 - the two arms' physical plans differ, and
 - their outputs are equal under ``checks.oracle_compare.frames_match``.
+Both checks run for every query and a refusal reports both verdicts, so
+a refused run still says whether the outputs matched. The plan string
+does not show the Python closures inside mapInPandas/mapInArrow, so a
+change confined to a Python kernel plans identically and is refused.
 Reps alternate which arm leads. The one JSON line on stdout carries
 medians with the raw samples and a provenance stamp per arm.
 
@@ -52,6 +56,13 @@ _TAG = "@ab "  # prefixes worker replies; other stdout lines are passed on
 class Refused(Exception):
     """The arms are not comparable, so nothing is timed."""
 
+    def __init__(self, same: list, differ: dict):
+        self.same, self.differ = same, differ
+        super().__init__(
+            f"plans identical for {same or 'no query'}; "
+            f"outputs differ for {differ or 'no query'}"
+        )
+
 
 def parse_arm(spec: str) -> tuple[str, dict[str, str]]:
     """``REF[:K=V[,K=V...]]`` -> (ref, env)."""
@@ -84,13 +95,11 @@ def preflight(plans: dict, outputs: dict) -> None:
     from product_data_pipelining_spark.checks.oracle_compare import frames_match
 
     a, b = plans["a"], plans["b"]
-    same = [q for q in a if plan_shape(a[q]) == plan_shape(b[q])]
-    if same:
-        raise Refused(f"the arms plan identically, nothing to compare: {same}")
     checks = {q: frames_match(outputs["b"][q], outputs["a"][q]) for q in a}
     differ = {q: why for q, (ok, why) in checks.items() if not ok}
-    if differ:
-        raise Refused(f"the arms' outputs differ: {differ}")
+    same = [q for q in a if plan_shape(a[q]) == plan_shape(b[q])]
+    if same or differ:
+        raise Refused(same, differ)
 
 
 def _recv(proc: subprocess.Popen) -> dict:
@@ -109,12 +118,12 @@ def _noop(df) -> None:
 def _worker(tree: str, out: str, queries: list[str]) -> None:
     """One arm: plan, dump the outputs, warm up, then time on request."""
     sys.path.insert(0, tree)
-    import bench  # noqa: F401  (sets the serving posture in os.environ)
+    import bench  # sets the serving posture in os.environ
     from product_data_pipelining_spark.registry import all_queries
     from product_data_pipelining_spark.session import get_spark
 
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    spark = get_spark(app_name="ab", cpus=int(os.environ["SPARK_GRAFT_CPUS"]))
+    spark = get_spark(app_name="ab", cpus=bench.CPUS)
     specs = all_queries()
     dfs = {q: specs[q].fn(spark, sf_dir) for q in queries}
     plans = {
@@ -124,7 +133,7 @@ def _worker(tree: str, out: str, queries: list[str]) -> None:
     for q, df in dfs.items():
         df.toPandas().to_pickle(os.path.join(out, f"{q}.pkl"))
         _noop(df)  # warm-up: JIT, codegen, Python workers
-    print(_TAG + json.dumps({"plans": plans}), flush=True)
+    print(_TAG + json.dumps({"plans": plans, "cpus": bench.CPUS}), flush=True)
     for line in sys.stdin:
         df = dfs[line.strip()]
         t0 = time.perf_counter()
@@ -150,7 +159,6 @@ def _start(arm: str, ref: str, env: dict, args, tmp: str) -> subprocess.Popen:
     child.update(
         SPARK_GRAFT_PLAN_CACHE="0",
         SPARK_GRAFT_SF_DIR=args.dir,
-        SPARK_GRAFT_CPUS=str(args.cpus),
         # executor-side Python workers import from the arm's tree too
         PYTHONPATH=os.pathsep.join(filter(None, [tree, child.get("PYTHONPATH")])),
     )
@@ -180,8 +188,6 @@ def main() -> None:
     ap.add_argument("--dir", required=True, help="shared SF dir")
     ap.add_argument("--queries", required=True, help="comma-separated names")
     ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())))
     args = ap.parse_args()
     args.queries = [q.strip() for q in args.queries.split(",") if q.strip()]
     try:
@@ -195,14 +201,19 @@ def main() -> None:
         try:
             for k in ARMS:
                 procs[k] = _start(k, *arms[k], args, tmp)
-            plans = {k: _recv(procs[k])["plans"] for k in ARMS}
+            ready = {k: _recv(procs[k]) for k in ARMS}
+            plans = {k: ready[k]["plans"] for k in ARMS}
+            cpus = {k: ready[k]["cpus"] for k in ARMS}
             outputs = {k: {q: pd.read_pickle(f"{tmp}/out_{k}/{q}.pkl")
                            for q in args.queries} for k in ARMS}
             try:
                 preflight(plans, outputs)
             except Refused as exc:
-                print(json.dumps({"metric": "ab", "refused": str(exc),
-                                  "provenance": stamps}))
+                print(json.dumps({
+                    "metric": "ab", "refused": str(exc), "cpus": cpus,
+                    "plans_differ": not exc.same, "outputs_equal": not exc.differ,
+                    "provenance": stamps,
+                }))
                 raise SystemExit(1)
             samples = {q: {k: [] for k in ARMS} for q in args.queries}
             for rep in range(args.reps):
@@ -226,7 +237,7 @@ def main() -> None:
         result[q] = {"rows": len(outputs["a"][q]), "median_sec": med,
                      "b_over_a": ratio, "samples": s}
     print(json.dumps({
-        "metric": "ab", "dir": args.dir, "cpus": args.cpus, "reps": args.reps,
+        "metric": "ab", "dir": args.dir, "cpus": cpus, "reps": args.reps,
         "plans_differ": True, "outputs_equal": True, "queries": result,
         "provenance": stamps,
     }))

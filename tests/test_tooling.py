@@ -47,17 +47,20 @@ def test_ab_refuses_arms_that_plan_identically():
     frames = {arm: {"q": pd.DataFrame({"x": [1]})} for arm in ab.ARMS}
     # the same plan from another process: only its ids differ
     same = PLAN.replace("#12", "#40").replace("plan_id=7", "plan_id=93")
-    with pytest.raises(ab.Refused, match="plan identically"):
+    with pytest.raises(ab.Refused, match="plans identical for") as refused:
         ab.preflight({"a": {"q": PLAN}, "b": {"q": same}}, frames)
+    # the outputs were still compared, and the refusal says they matched
+    assert (refused.value.same, refused.value.differ) == (["q"], {})
 
 
 def test_ab_refuses_to_time_differing_outputs():
     plans = {"a": {"q": PLAN}, "b": {"q": OTHER_PLAN}}
     got = pd.DataFrame({"x": [1, 2]})
-    with pytest.raises(ab.Refused, match="outputs differ"):
+    with pytest.raises(ab.Refused, match="outputs differ for") as refused:
         ab.preflight(
             plans, {"a": {"q": got}, "b": {"q": pd.DataFrame({"x": [1, 3]})}}
         )
+    assert refused.value.same == [] and list(refused.value.differ) == ["q"]
     # row order is not a difference
     ab.preflight(plans, {"a": {"q": got}, "b": {"q": got.iloc[::-1]}})
 
@@ -73,6 +76,9 @@ def test_bench_mirrors_only_a_full_headline_run_at_the_default_sf(tmp_path):
     assert bench.mirror_target({"SPARK_GRAFT_SF_DIR": bench.DEFAULT_SF_DIR}) == last
     assert bench.mirror_target({"SPARK_GRAFT_ONLY": "sim06_pq_adc"}) is None
     assert bench.mirror_target({"SPARK_GRAFT_SF_DIR": "/tmp/sf1"}) is None
+    assert bench.mirror_target({"SPARK_GRAFT_SKIP_DUCKDB": "1"}) is None
+    assert bench.mirror_target({"SPARK_GRAFT_REPEATS": "1"}) is None
+    assert bench.mirror_target({"SPARK_GRAFT_REPEATS": "5"}) == last
     explicit = str(tmp_path / "mirror.json")
     assert bench.mirror_target({
         "SPARK_GRAFT_BENCH_MIRROR": explicit,
