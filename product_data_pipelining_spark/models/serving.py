@@ -28,6 +28,7 @@ from typing import Any, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
 from . import dashboard
 
 # categorical slots (fixed order; first three validate all-pairs CVD in
@@ -359,53 +360,57 @@ def dashboard_html(m: dict[str, DataFrame]) -> str:
 
     ``m`` is ``runner.build_models``/``run_pipeline`` output. All
     aggregation happens in Spark (modules ``dashboard``/``marts``); the
-    frames collected here are chart-sized (tens of rows). Used by both
-    the static artifact writer (``render_dashboard``) and the live
-    per-request server (``serving_http``)."""
+    six chart frames collected here are chart-sized (tens of rows) and
+    independent, so they are collected concurrently, width six, no knob
+    (``session.run_concurrently``). Used by both the static artifact
+    writer (``render_dashboard``) and the live per-request server
+    (``serving_http``)."""
     fact = m["fact_prices"]
+    cvm_df = dashboard.category_value_map(fact)
 
-    # chart 1: price distribution box plot (app.py:84-124), with the
-    # reference's all-dates fallback when the Q1-2026 window is empty
-    pr = dashboard.price_distribution(fact, q1_2026_only=True)
-    title_range = "Q1 2026"
-    if pr.isEmpty():
-        pr = dashboard.price_distribution(fact, q1_2026_only=False)
-        rng = dashboard.effective_date_range(fact).collect()[0]
-        title_range = f"{rng['min_date']} – {rng['max_date']}"
-    box = (
-        pr.groupBy("category")
-        .agg(
-            F.expr(
-                "percentile(CAST(regular_price AS DOUBLE),"
-                " array(0.0, 0.25, 0.5, 0.75, 1.0))"
-            ).alias("p")
+    def price_box() -> tuple[str, list]:
+        # chart 1: price distribution box plot (app.py:84-124), with the
+        # reference's all-dates fallback when the Q1-2026 window is empty
+        pr = dashboard.price_distribution(fact, q1_2026_only=True)
+        title_range = "Q1 2026"
+        if pr.isEmpty():
+            pr = dashboard.price_distribution(fact, q1_2026_only=False)
+            rng = dashboard.effective_date_range(fact).collect()[0]
+            title_range = f"{rng['min_date']} – {rng['max_date']}"
+        box = (
+            pr.groupBy("category")
+            .agg(
+                F.expr(
+                    "percentile(CAST(regular_price AS DOUBLE),"
+                    " array(0.0, 0.25, 0.5, 0.75, 1.0))"
+                ).alias("p")
+            )
+            .orderBy(F.desc(F.col("p")[2]))
+            .collect()
         )
-        .orderBy(F.desc(F.col("p")[2]))
-        .collect()
-    )
-    box_rows = [(r["category"], *[float(v) for v in r["p"]]) for r in box]
+        return title_range, box
 
-    # chart 2: per-state price summary (map stand-in; app.py:149-156)
-    st = dashboard.state_price_summary(m["mart_location_sales"]).orderBy(
-        F.desc("state_avg_price")
-    ).collect()
+    (title_range, box), st, mix, dd, cvm, (med,) = run_concurrently(fact.sparkSession, [
+        price_box,
+        # chart 2: per-state price summary (map stand-in; app.py:149-156)
+        dashboard.state_price_summary(m["mart_location_sales"]).orderBy(
+            F.desc("state_avg_price")
+        ).collect,
+        # chart 3: stock-status mix (app.py:265-285)
+        dashboard.stock_status_mix(fact).collect,
+        # chart 4: discount depth (app.py:335-345)
+        dashboard.discount_depth(fact).collect,
+        # chart 5: category value map + medians (app.py:383-435)
+        cvm_df.collect,
+        dashboard.value_map_medians(cvm_df).collect,
+    ])
+    box_rows = [(r["category"], *[float(v) for v in r["p"]]) for r in box]
     st_rows = [(r["state"], float(r["state_avg_price"])) for r in st]
     st_products = {"products": [r["state_total_products"] for r in st]}
-
-    # chart 3: stock-status mix (app.py:265-285)
-    mix = dashboard.stock_status_mix(fact).collect()
     statuses = sorted({r["status"] for r in mix})
     cats = sorted({r["category"] for r in mix})
     pct = {(r["category"], r["status"]): float(r["pct"]) for r in mix}
-
-    # chart 4: discount depth (app.py:335-345)
-    dd = dashboard.discount_depth(fact).collect()
     dd_rows = [(r["category"], float(r["avg_discount_pct"])) for r in dd]
-
-    # chart 5: category value map + medians (app.py:383-435)
-    cvm_df = dashboard.category_value_map(fact)
-    cvm = cvm_df.collect()
-    med = dashboard.value_map_medians(cvm_df).collect()[0]
     pts = [
         (
             r["category"],

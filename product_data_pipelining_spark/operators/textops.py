@@ -51,8 +51,10 @@ def tokens(col: str | Column = "text") -> Column:
 
 
 def marker_score(toks: Column, markers: tuple[str, ...]) -> Column:
-    """Count of tokens that appear in a fixed marker vocabulary."""
-    return F.size(F.filter(toks, lambda x: x.isin(*markers)))
+    """Count of tokens that appear in a fixed marker vocabulary; NULL for
+    a NULL token list (``array_size``, not the legacy ``size`` that
+    answers -1 when ANSI is off), like DuckDB's ``len``."""
+    return F.array_size(F.filter(toks, lambda x: x.isin(*markers)))
 
 
 # Measured dispatch bounds for the Arrow featurization (see
@@ -88,7 +90,7 @@ def _arrow_token_counts(
     literal space and count, per document, the tokens matching each of
     several fixed vocabularies (``counts`` maps an output column name to
     its marker vocabulary; ``None`` means the plain non-empty word
-    count). The JVM expression chain (``size(filter(split(...)))`` per
+    count). The JVM expression chain (``array_size(filter(split(...)))`` per
     vocabulary) re-walks the token array once per count; the Arrow pass
     splits ONCE per batch with ``pyarrow.compute.split_pattern``, then
     answers every count from the same flattened token buffer via an
@@ -113,9 +115,10 @@ def _arrow_token_counts(
     row-compared over the full sf10 corpus: EXP_TEXT_ARROW_SF10.json,
     ``outputs_equal``, from scripts/exp_text_arrow.py at 75cd1b4) — so
     oracle parity does not depend on the dispatch. Emitted count
-    columns are INT, matching ``F.size``'s type. ``passthrough``
-    columns ride the batch unchanged (md5 fingerprints stay JVM-side:
-    compute them BEFORE this pass and list them here). Only
+    columns are INT, matching ``array_size``'s type; a NULL ``text``
+    yields NULL counts on both arms, as DuckDB's ``len`` does.
+    ``passthrough`` columns ride the batch unchanged (md5 fingerprints
+    stay JVM-side: compute them BEFORE this pass and list them here). Only
     ``passthrough + (text,)`` crosses the Python boundary (guide §4.1:
     project before an opaque op — Spark cannot prune through it).
     """
@@ -142,7 +145,7 @@ def _arrow_token_counts(
             *passthrough,
             *[
                 (
-                    F.size(toks) if vocab is None
+                    F.array_size(toks) if vocab is None
                     else marker_score(toks, vocab)
                 ).alias(name)
                 for name, vocab in counts.items()
@@ -185,6 +188,9 @@ def _arrow_token_counts(
             )
             flat = arr.values
             lo, hi = offsets[:-1], offsets[1:]
+            # a NULL text splits to a NULL list: its counts are NULL, as
+            # array_size(filter(split(NULL))) is on the JVM chain
+            null_doc = arr.is_null().to_numpy(zero_copy_only=False)
 
             def seg_count(mask_arr):
                 # per-document count of set bits: cumsum over the flat
@@ -200,7 +206,9 @@ def _arrow_token_counts(
                     if vs is None
                     else pc.is_in(flat, value_set=vs)
                 )
-                cols[name] = pa.array(seg_count(mask), type=pa.int32())
+                cols[name] = pa.array(
+                    seg_count(mask), type=pa.int32(), mask=null_doc
+                )
             yield pa.RecordBatch.from_pydict(cols)
 
     return docs.select(*pass_names, "text").mapInArrow(featurize, out_schema)

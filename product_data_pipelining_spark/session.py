@@ -22,10 +22,35 @@ that role. Every knob below is chosen for the 100 TB target:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Sequence, TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+T = TypeVar("T")
+
+# widest caller: the dashboard's six chart frames
+_MAX_CONCURRENT = 6
+
+
+def run_concurrently(spark: SparkSession, actions: Sequence[Callable[[], T]]) -> list[T]:
+    """Run independent Spark actions at once; return their results in order.
+
+    One thread per action (at most ``_MAX_CONCURRENT``), so small jobs
+    that would each leave most cores idle share the scheduler instead of
+    queueing behind one another (dbt's ``threads``). Each action is
+    wrapped with ``inheritable_thread_target(spark)`` on the calling
+    thread: its jobs keep the caller's local properties (job group,
+    description), which plain worker threads would drop. Every action
+    runs to completion; then the first failure, in action order, is
+    raised.
+    """
+    with ThreadPoolExecutor(min(len(actions), _MAX_CONCURRENT)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(a)) for a in actions]
+    return [f.result() for f in futures]
 
 
 def available_ram_gb() -> int:

@@ -2,19 +2,37 @@
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+import threading
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 
 from product_data_pipelining_spark.checks.schema_checks import (
     SCHEMA_CHECKS,
     run_schema_checks,
 )
+from product_data_pipelining_spark.models import marts
 from product_data_pipelining_spark.models.pipeline_queries import ensure_fixtures
 from product_data_pipelining_spark.models.runner import (
+    MATERIALIZED,
+    RAW_SCHEMAS,
+    RAW_TABLES,
     build_models,
     dashboard_queries,
     load_raw,
+    run_incremental,
     run_pipeline,
+    seed_snapshots,
 )
+from product_data_pipelining_spark.models.serving import dashboard_html
+from product_data_pipelining_spark.plans.inspect import physical_plan
 from product_data_pipelining_spark.sources.ingest import (
     RestClient,
     flatten_locations,
@@ -53,19 +71,198 @@ def test_schema_checks_catch_violations(spark):
     assert not_null_violations(bad, "location_id") == 1
 
 
-def test_run_pipeline_materializes_and_rereads(spark, tmp_path):
-    out = str(tmp_path / "warehouse")
-    m = run_pipeline(spark, ensure_fixtures(), out_dir=out)
-    # marts were written and re-read: scanning parquet, not recomputing joins
-    assert (tmp_path / "warehouse" / "fact_prices").exists()
-    assert m["fact_prices"].count() > 0
-    assert m["mart_category_distribution"].count() > 0
+_CUTOFF = "2026-02-01 13:00:00"  # splits the fixture's fetched_at range
+_MARTS = MATERIALIZED[3:]
+
+
+def _scanned_tables(df) -> set[str]:
+    """Directory names of the parquet tables a frame's plan scans."""
+    return set(re.findall(
+        r"InMemoryFileIndex\(\d+ paths?\)\[file:\S*?/([^/\]]+)\]",
+        physical_plan(df),
+    ))
+
+
+def _joins(df) -> list[str]:
+    """Join nodes of a frame's optimized logical plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if ln.lstrip(" :+-").startswith("Join ")]
+
+
+def _rows(df) -> set[tuple]:
+    return {tuple(map(str, r)) for r in df.collect()}
+
+
+def _job_ids(sc) -> set[int]:
+    """Every job the status store knows, once the listener bus drained."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+@pytest.fixture
+def built_marts(monkeypatch):
+    """The mart frames as the runner builds them; a later build of the
+    same mart (the one over the written fact) replaces an earlier one."""
+    built = {}
+    for name in _MARTS:
+        def record(*args, _fn=getattr(marts, name), _name=name):
+            built[_name] = _fn(*args)
+            return built[_name]
+
+        monkeypatch.setattr(marts, name, record)
+    return built
+
+
+def _assert_marts_scan_written_fact(built) -> None:
+    """Each mart was built over the fact_prices parquet: no scan of the
+    staging/raw lineage and no re-derived fact join. mart_location_sales
+    may still join dim_locations."""
+    assert set(built) == set(_MARTS)
+    for name, df in built.items():
+        allowed = {"fact_prices"}
+        if name == "mart_location_sales":
+            allowed.add("dim_locations")
+        tables = _scanned_tables(df)
+        assert "fact_prices" in tables and tables <= allowed, (name, tables)
+        assert len(_joins(df)) == len(allowed) - 1, (name, _joins(df))
+
+
+def test_run_pipeline_materializes_and_rereads(spark, tmp_path, built_marts):
+    out = tmp_path / "warehouse"
+    m = run_pipeline(spark, ensure_fixtures(), out_dir=str(out))
+    # every materialized model is a re-read of its own parquet table:
+    # scanning parquet, not recomputing joins
+    for name in MATERIALIZED:
+        assert (out / name).exists()
+        assert _scanned_tables(m[name]) == {name}, name
+        assert not _joins(m[name]), name
+    _assert_marts_scan_written_fact(built_marts)
     # lazy and materialized runs agree
     lazy = build_models(load_raw(spark, ensure_fixtures()))
-    assert (
-        m["mart_category_distribution"].count()
-        == lazy["mart_category_distribution"].count()
+    for name in MATERIALIZED:
+        assert _rows(m[name]) == _rows(lazy[name]), name
+
+
+def test_incremental_marts_build_on_written_fact(spark, tmp_path, built_marts):
+    """run_incremental builds its marts over the re-read fact table, as
+    run_pipeline does, not over the lazy fact join (which each mart
+    write would re-derive)."""
+    raw_dir, out = ensure_fixtures(), str(tmp_path / "incr")
+    seed_snapshots(spark, raw_dir, out, until=_CUTOFF)
+    run_incremental(spark, raw_dir, out, since=_CUTOFF)
+    _assert_marts_scan_written_fact(built_marts)
+
+
+def test_runner_and_serving_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The concurrent writes and collects run on worker threads; every
+    job they start must still belong to the caller's job group, which is
+    how spans attribute work."""
+    sc = spark.sparkContext
+    raw_dir, group = ensure_fixtures(), f"attribution-{uuid.uuid4().hex}"
+    before = _job_ids(sc)
+    sc.setJobGroup(group, "runner and serving")
+    try:
+        m = run_pipeline(spark, raw_dir, str(tmp_path / "out"))
+        dashboard_html(m)
+        seed_snapshots(spark, raw_dir, str(tmp_path / "incr"), until=_CUTOFF)
+        run_incremental(spark, raw_dir, str(tmp_path / "incr"), since=_CUTOFF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = _job_ids(sc) - before
+    assert started
+    assert started == set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_runner_reads_start_no_jobs(spark, tmp_path, monkeypatch):
+    """Every parquet read the runner makes passes a known schema, so none
+    starts a schema-inference job; the passed schemas of the read-backs
+    equal what plain inference gives for the written tables."""
+    sc = spark.sparkContext
+    groups = []
+    parquet = DataFrameReader.parquet
+
+    def tracked(self, *paths, **options):
+        group = f"read-{uuid.uuid4().hex}"
+        groups.append(group)
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, "parquet read")
+        try:
+            return parquet(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", tracked)
+    raw_dir, out = ensure_fixtures(), tmp_path / "out"
+    m = run_pipeline(spark, raw_dir, str(out))
+    seed_snapshots(spark, raw_dir, str(tmp_path / "incr"), until=_CUTOFF)
+    run_incremental(spark, raw_dir, str(tmp_path / "incr"), since=_CUTOFF)
+    monkeypatch.undo()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert groups
+    tracker = sc.statusTracker()
+    assert [g for g in groups if tracker.getJobIdsForGroup(g)] == []
+    for name in MATERIALIZED:
+        assert m[name].schema == spark.read.parquet(str(out / name)).schema, name
+
+
+def test_raw_schemas_match_inferred(spark, tmp_path):
+    """RAW_SCHEMAS is what inference gives on the fixtures and on any
+    synthetic.write_raw_tables output."""
+    from product_data_pipelining_spark.sources.synthetic import write_raw_tables
+
+    generated = str(tmp_path / "raw")
+    write_raw_tables(generated, seed=7, n_locations=5, n_products=10, n_prices=40)
+    for raw_dir in (ensure_fixtures(), generated):
+        for name in RAW_TABLES:
+            path = os.path.join(raw_dir, f"{name}.parquet")
+            declared = spark.read.schema(RAW_SCHEMAS[name]).parquet(path).schema
+            assert declared == spark.read.parquet(path).schema, (raw_dir, name)
+
+
+def test_failed_concurrent_branch_surfaces_from_run_pipeline(spark, tmp_path, monkeypatch):
+    """A mart that fails at execution, beside two that succeed in the
+    same level: run_pipeline raises its error and does not hang."""
+    monkeypatch.setattr(
+        marts, "mart_price_by_category",
+        lambda fact: fact.withColumn(
+            "boom", F.raise_error(F.lit("mart failed")).cast("string")),
     )
+    errors = []
+
+    def run():
+        try:
+            run_pipeline(spark, ensure_fixtures(), str(tmp_path / "out"))
+        except Exception as exc:
+            errors.append(exc)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(300)
+    assert not t.is_alive(), "run_pipeline hung on a failed branch"
+    assert len(errors) == 1 and "mart failed" in str(errors[0])
+
+
+def test_failed_merge_leaves_its_snapshot_intact(spark, tmp_path):
+    """A raw feed whose column type no longer matches RAW_SCHEMAS fails
+    its merge loudly; that table's snapshot is not swapped."""
+    raw_dir, out = str(tmp_path / "raw"), str(tmp_path / "incr")
+    shutil.copytree(ensure_fixtures(), raw_dir)
+    seed_snapshots(spark, raw_dir, out, until=_CUTOFF)
+    snap = os.path.join(out, "snap_raw_products")
+
+    def files(d):
+        return {f: open(os.path.join(d, f), "rb").read() for f in os.listdir(d)}
+
+    seeded = files(snap)
+    feed = os.path.join(raw_dir, "raw_products.parquet")
+    t = pq.read_table(feed)
+    i = t.schema.get_field_index("fetched_at")
+    pq.write_table(t.set_column(i, "fetched_at", t["fetched_at"].cast(pa.string())), feed)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_incremental(spark, raw_dir, out, since=_CUTOFF)
+    assert files(snap) == seeded
 
 
 def test_dashboard_queries_run(models):
@@ -220,22 +417,13 @@ def test_frame_sampler_matches_python_recompute(spark, sf_dir):
 def test_incremental_run_converges_to_full_refresh(spark, tmp_path):
     """Seed from the first half of history, merge the rest incrementally;
     every mart must equal the full-refresh build bit-for-bit."""
-    from product_data_pipelining_spark.models.runner import (
-        MATERIALIZED,
-        run_incremental,
-        seed_snapshots,
-    )
-
     raw_dir = ensure_fixtures()
     out = str(tmp_path / "incr")
-    cutoff = "2026-02-01 13:00:00"  # splits the fixture's fetched_at range
-    seed_snapshots(spark, raw_dir, out, until=cutoff)
-    incr = run_incremental(spark, raw_dir, out, since=cutoff)
+    seed_snapshots(spark, raw_dir, out, until=_CUTOFF)
+    incr = run_incremental(spark, raw_dir, out, since=_CUTOFF)
     full = build_models(load_raw(spark, raw_dir))
     for name in MATERIALIZED:
-        got = {tuple(map(str, r)) for r in incr[name].collect()}
-        want = {tuple(map(str, r)) for r in full[name].collect()}
-        assert got == want, f"{name}: incremental != full refresh"
+        assert _rows(incr[name]) == _rows(full[name]), f"{name}: incremental != full refresh"
 
 
 def test_format_roundtrip_json_csv_orc(spark, sf_dir, tmp_path):

@@ -665,6 +665,31 @@ def test_text_arrow_featurization_matches_jvm_twin(spark, sf_dir, monkeypatch):
         assert a == b, name
 
 
+def test_text_arms_agree_on_null_and_blank_text(spark, monkeypatch):
+    """Both featurization arms on a NULL, an empty and a blank ``text``:
+    NULL text gives NULL counts (DuckDB's ``len`` of a NULL list), empty
+    and blank text give 0 — identical frames, values AND schema."""
+    from product_data_pipelining_spark.operators import textops
+
+    docs = spark.createDataFrame(
+        [(1, "the fast data of a key"), (2, None), (3, ""), (4, "  of  ")],
+        "doc_id INT, text STRING",
+    )
+    counts = {"word_count": None, "stopword_count": textops.STOPWORDS,
+              **{f"s_{k}": v for k, v in textops.LANG_MARKERS.items()}}
+    frames = {}
+    for arm in ("1", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_TEXT_ARROW", arm)
+        df = textops._arrow_token_counts(docs, counts)
+        assert ("MapInArrow" in physical_plan(df)) == (arm == "1")
+        frames[arm] = (df.dtypes, sorted(tuple(r) for r in df.collect()))
+    assert frames["1"] == frames["0"]
+    rows = {r[0]: r[1:] for r in frames["0"][1]}
+    assert rows[2] == (None,) * len(counts)
+    assert rows[3] == (0,) * len(counts)
+    assert rows[4] == (1, 1, 0, 0, 0, 0)
+
+
 def test_text_arrow_dispatch_is_data_sized(spark, sf_dir, monkeypatch):
     """The Arrow arm only plans when the measured crossover conditions
     hold: >= _TEXT_ARROW_MIN_COUNTS vocabulary passes AND a documents
