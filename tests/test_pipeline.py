@@ -7,6 +7,7 @@ import re
 import shutil
 import threading
 import uuid
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -253,7 +254,7 @@ def test_failed_merge_leaves_its_snapshot_intact(spark, tmp_path):
     snap = os.path.join(out, "snap_raw_products")
 
     def files(d):
-        return {f: open(os.path.join(d, f), "rb").read() for f in os.listdir(d)}
+        return {p.name: p.read_bytes() for p in Path(d).iterdir()}
 
     seeded = files(snap)
     feed = os.path.join(raw_dir, "raw_products.parquet")
