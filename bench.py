@@ -57,13 +57,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent / "scripts"))
 
 from _provenance import provenance  # noqa: E402
 
-from product_data_pipelining_spark.io import TPCH_TABLES, _table_bytes
+from product_data_pipelining_spark.io import TPCH_TABLES
 from product_data_pipelining_spark.registry import all_queries
-from product_data_pipelining_spark.session import get_spark
+from product_data_pipelining_spark.session import DEFAULT_CPUS as CPUS
+from product_data_pipelining_spark.session import get_spark, serve
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # 1 = skip the in-process DuckDB baseline entirely (duckdb_total_sec = 0,
 # ratio_vs_duckdb = null). Used by the CPU strong-scaling probe, which
 # re-runs the Spark side at several core counts and has no use for four
@@ -73,32 +73,7 @@ SKIP_DUCKDB = os.environ.get("SPARK_GRAFT_SKIP_DUCKDB", "0") == "1"
 # median-of-5 for median-of-3 to fit several legs in one session.
 _REPEATS_ENV = os.environ.get("SPARK_GRAFT_REPEATS")
 
-# serving posture: hot base tables live in the in-memory columnar cache
-# (repartitioned once at materialization) — see io.load_table — and each
-# headline plan is prepared once and re-executed (registry plan cache).
-# Static planning + data-sized shuffle partitions: AQE's stage-by-stage
-# materialization (one scheduler job + driver replan per exchange) and
-# 32-task micro-shuffles dominate sub-second queries at this SF —
-# measured 11.1s -> ~3s total on this headline set. AQE remains the
-# default for the batch/cluster paths (get_spark without these envs);
-# at 100 TB each shuffle carries GBs per partition and AQE's runtime
-# re-planning pays for itself.
-os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")
-os.environ.setdefault("SPARK_GRAFT_PLAN_CACHE", "1")
-os.environ.setdefault("SPARK_GRAFT_AQE", "0")
-
-
-def _sized_shuffle_partitions(sf_dir: str) -> str:
-    """Static-planning analog of AQE coalescing: shuffle partition count
-    sized from the SF dir's bytes (~64 MB per partition, floor 8, cap at
-    the core count) so the sf0.1 posture (8) doesn't serialize 50x data
-    through 8-way exchanges when the probe reuses this harness."""
-    return str(min(CPUS, max(8, _table_bytes(sf_dir) // (64 * 1024 * 1024))))
-
-
-os.environ.setdefault(
-    "SPARK_GRAFT_SHUFFLE_PARTITIONS", _sized_shuffle_partitions(SF_DIR)
-)
+serve(SF_DIR)  # table and plan caches, static data-sized planning
 
 # headline set: one per operator family, weighted toward the shapes that
 # dominate real workloads (scan-agg, star join, window, dedup, ANN, text)
@@ -243,7 +218,7 @@ def main() -> None:
     # Warm-up: run every headline plan once at the BENCH SF so JVM JIT,
     # whole-stage-codegen compilation, parquet reader setup, Python worker
     # spawn-up, and — critically — the one-time in-memory columnar cache
-    # materialization of the base tables (SPARK_GRAFT_CACHE_TABLES) are
+    # materialization of the base tables (the serving table cache) are
     # excluded from the measured steady-state times. (Warming at a smaller
     # SF leaves the bench-SF caches cold: the first timed run then pays a
     # ~10x cache-build penalty that has nothing to do with the plan.)

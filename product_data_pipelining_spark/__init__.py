@@ -9,7 +9,7 @@ text analysis) the reference lacks.
 
 Layout
 ------
-- ``session``    SparkSession factory tuned for scale (AQE, shuffle sizing).
+- ``session``    SparkSession factory and its batch/serving postures.
 - ``io``         table loaders with explicit schemas.
 - ``registry``   the query registry: every operator exposed as a named
                  ``(spark, sf_dir) -> DataFrame`` with a DuckDB oracle SQL.

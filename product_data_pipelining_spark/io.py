@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import posture
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -25,8 +27,6 @@ TPCH_TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # below this input size a repartition buys nothing for scan-light queries —
 # compute-heavy operators pass force=True instead
@@ -73,35 +73,35 @@ def parallelize_scan(df: DataFrame, force: bool = False) -> DataFrame:
     return df.repartition(target)
 
 
-# Hot-table serving mode (SPARK_GRAFT_CACHE_TABLES=1): keep each base
-# table as an in-memory columnar cache, repartitioned once at
-# materialization so a single-row-group file stops serializing every
-# downstream consumer onto one core. This is the standard Spark serving
-# posture for a repeatedly-queried warehouse; it is opt-in so tests
-# exercise the cold plans (predicate pushdown, scan parallelism) the
-# 100 TB path relies on.
+# Hot-table cache (session.serve's posture): keep each base table as an
+# in-memory columnar cache, repartitioned once at materialization so a
+# single-row-group file stops serializing every downstream consumer onto
+# one core. This is the standard Spark serving posture for a repeatedly-
+# queried warehouse; batch leaves it off, so tests exercise the cold
+# plans (predicate pushdown, scan parallelism) the 100 TB path relies on.
+# Process-global caches are keyed by the context's applicationId, so
+# state held under a stopped context is never touched after a restart.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 # Live cached state that a returned lazy DataFrame still references — a
 # query block / codebook broadcast, or a persisted frame — keyed by
-# (id(SparkContext), tag). It must outlive the function that builds it,
+# (applicationId, tag). It must outlive the function that builds it,
 # so it can't be released there; each new run releases its predecessor
 # under the same key instead, and repeated bench passes hold ONE live
 # copy per key.
-# Keying by context id means state held under a stopped context is never
-# touched after a restart.
-_LIVE: dict = {}
+_LIVE: dict[tuple[str, str], object] = {}
 
 
-def swap_live(key, make):
-    """Release the object held under ``key``, then hold and return
-    ``make()``: a new Broadcast, or a frame's bound ``persist``.
+def swap_live(spark: SparkSession, tag: str, make):
+    """Release what ``spark``'s context holds under ``tag``, then hold
+    and return ``make()``: a new Broadcast, or a frame's bound ``persist``.
 
     The release must come first. A re-run builds a frame with the same
     plan, and persisting it while the old copy is cached reuses the old
     cache entry, which the release then drops. unpersist, not destroy:
     an earlier run's lazy frame may still reference the old copy, which
     then just re-ships (or recomputes) on use."""
+    key = (spark.sparkContext.applicationId, tag)
     prev = _LIVE.pop(key, None)
     if prev is not None:
         prev.unpersist(blocking=False)
@@ -276,7 +276,7 @@ def load_table(
     ``events.parquet`` carries TIMESTAMP(NANOS) which Spark's vectorized
     reader rejects; it is read via :func:`load_events` instead.
     """
-    cache = os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1"
+    cache = posture().cache_tables
     if name == "events":
         df = load_events(spark, sf_dir)
         return _cached(spark, sf_dir, name, df) if cache else df
@@ -310,11 +310,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:  # a future driver may rewrite the file at micro precision
         df = df.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All testdata tables as lazy DataFrames, keyed by name."""
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
 
 
 def write_table(

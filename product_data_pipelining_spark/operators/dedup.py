@@ -1238,7 +1238,7 @@ def dd13_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"vec_id": vid, "cell": cid[bestc]})
 
     asg = swap_live(
-        (id(spark.sparkContext), "dd13_asg"),
+        spark, "dd13_asg",
         emb.select("vec_id", "embedding").mapInPandas(
             assign, "vec_id long, cell long"
         ).persist,

@@ -537,7 +537,7 @@ def a03_percentile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |groups|-bounded frame (calendar x returnflag rows, never
     # SF-proportional) collapses the plan to the documented three fact
     # scans: one for g, two for nn (histogram + candidate passes).
-    g = swap_live((id(spark.sparkContext), "a03_g"), g.persist)
+    g = swap_live(spark, "a03_g", g.persist)
     gstats = g.select("returnflag", "_d", "_n", "_vmin", "_vmax")
 
     def pos_of(q: float):

@@ -87,7 +87,7 @@ def _corpus_stats(spark: SparkSession, sf_dir: str) -> tuple:
     signal for :func:`dot`/:func:`norm` to keep the ragged-safe HOF
     form instead of an unrolled fixed-width chain.
     """
-    key = (id(spark.sparkContext), sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
     st = _CORPUS_N_CACHE.get(key)
     if st is None:
         row = (
@@ -132,7 +132,7 @@ def _vector_block(spark: SparkSession, tag: str, rows: list):
         [list(map(float, r.embedding)) for r in rows],
     )
     return swap_live(
-        (id(spark.sparkContext), tag), lambda: spark.sparkContext.broadcast(block)
+        spark, tag, lambda: spark.sparkContext.broadcast(block)
     )
 
 
@@ -598,7 +598,7 @@ def sim02x_ann_lsh_bucketed_np(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids.append(int(r.vec_id))
         vecs.append(list(map(float, r.embedding)))
     qb = swap_live(
-        (id(spark.sparkContext), "sim02x"),
+        spark, "sim02x",
         lambda: spark.sparkContext.broadcast(by_bucket),
     )
 
@@ -972,7 +972,7 @@ def sim09_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     ranked = swap_live(
-        (id(spark.sparkContext), "sim09_ranked"),
+        spark, "sim09_ranked",
         _gemm_cell_ranked(spark, sf_dir, KNN_NPROBE, "sim09").persist,
     )  # consumed by cells AND probes below; lifecycle-tracked (r7 ADVICE)
     v = emb.select("vec_id", "embedding")
@@ -1164,7 +1164,7 @@ def sim05_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         # keyed per Lloyd's round: repeated invocations in one context
         # hold at most KMEANS_ITERS live codebook broadcasts (r10 ADVICE)
         c_block = swap_live(
-            (id(spark.sparkContext), "sim05", rnd),
+            spark, f"sim05_{rnd}",
             lambda: spark.sparkContext.broadcast(block),
         )
 
@@ -1478,8 +1478,8 @@ def sim06_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(PQ_M)
         ]
     )
-    # per-query LUT as ONE array of PQ_M*PQ_K d6 longs indexed m*K+c
-    # (array_sort over unique BIGINT keys is deterministic); bounded by
+    # per-query LUT as ONE array of PQ_M*K d6 longs indexed m*K+c, K the
+    # seed count (array_sort over unique BIGINT keys is deterministic); bounded by
     # construction at PQ_MAX_QUERIES rows — broadcastable at any corpus
     # size, exactly like the codebook it derives from
     lut = dist.filter(
@@ -1497,7 +1497,8 @@ def sim06_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
             lambda s: s.getField("d"),
-        ).alias("lut")
+        ).alias("lut"),
+        (F.count(F.lit(1)) / PQ_M).cast("int").alias("lut_k"),
     )
     # ADC score = PQ_M O(1) array lookups summed in a codegen'd
     # projection (exact BIGINT adds — the same integers the r12 shape
@@ -1512,7 +1513,7 @@ def sim06_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s6: Column = F.lit(0).cast("long")
     for j in range(PQ_M):
-        s6 = s6 + F.get(F.col("lut"), F.col(f"c{j}") + j * PQ_K)
+        s6 = s6 + F.get(F.col("lut"), F.col(f"c{j}") + F.col("lut_k") * j)
     scored = joined.select("query_id", "vec_id", s6.alias("s6"))
     w = Window.partitionBy("query_id").orderBy(
         F.asc("s6"), F.asc("vec_id")
@@ -1632,7 +1633,7 @@ _SQL_IVFPQ_CTES_TMPL = f"""
     scored AS (
       SELECT cand.query_id, cand.neighbor_id, cand.cell,
              CAST(list_sum(list_transform(range(0, {PQ_M}),
-               m -> lutl.lt[m * {PQ_K} + encl.codes[m + 1] + 1]))
+               m -> lutl.lt[m * (len(lutl.lt) // {PQ_M}) + encl.codes[m + 1] + 1]))
                AS BIGINT) AS s6
       FROM cand
       JOIN encl ON encl.vec_id = cand.neighbor_id
@@ -1821,7 +1822,7 @@ def _gemm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed_rows.sort(key=lambda r: (int(r.vec_id) - 3) // PQ_STRIDE)
     seeds = [list(map(float, r.embedding)) for r in seed_rows]
     s_block = swap_live(
-        (id(spark.sparkContext), "sim07pq"),
+        spark, "sim07pq",
         lambda: spark.sparkContext.broadcast(seeds),
     )
     pq_m, pq_k, pq_sub = PQ_M, PQ_K, PQ_SUB
@@ -1833,12 +1834,12 @@ def _gemm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         import pandas as pd
 
         S = np.array(s_block.value, dtype=np.float64)  # (K, dim), code order
-        dim = S.shape[1]
-        acc = np.zeros(len(S), dtype=np.float64)
+        k, dim = S.shape  # K < pq_k when the corpus has few seed rows
+        acc = np.zeros(k, dtype=np.float64)
         for t in range(dim):  # sequential fold: parity with norm()'s HOF
             acc += S[:, t] * S[:, t]
         Sn = S / np.sqrt(acc)[:, None]
-        kidx = np.arange(pq_k, dtype=np.int64)
+        kidx = np.arange(k, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -1850,16 +1851,17 @@ def _gemm_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 acc += X[:, t] * X[:, t]
             Xn = X / np.sqrt(acc)[:, None]
             codes = np.empty((n, pq_m), dtype=np.int32)
-            d6all = np.empty((n, pq_m, pq_k), dtype=np.int64)
+            # ADC indexes m*pq_k + c; slots c >= K are never read
+            d6all = np.zeros((n, pq_m, pq_k), dtype=np.int64)
             for m in range(pq_m):
                 Xm = Xn[:, m * pq_sub:(m + 1) * pq_sub]
                 Cm = Sn[:, m * pq_sub:(m + 1) * pq_sub]
-                l2 = np.zeros((n, pq_k), dtype=np.float64)
+                l2 = np.zeros((n, k), dtype=np.float64)
                 for t in range(pq_sub):  # literal zip_with fold replay
                     d = Xm[:, t, None] - Cm[None, :, t]
                     l2 += d * d
                 d6 = np.floor(l2 * 1e6 + 0.5).astype(np.int64)
-                d6all[:, m, :] = d6
+                d6all[:, m, :k] = d6
                 codes[:, m] = np.argmin(d6 * pq_k + kidx[None, :], axis=1)
             isq = (vid % q_stride == 0) & (vid < q_stride * q_max)
             luts = [
@@ -1918,7 +1920,7 @@ def _ivfpq_scored(
     once the corpus outgrows one box's interpreter throughput.
     """
     ranked = swap_live(
-        (id(spark.sparkContext), f"sim07_ranked_{nprobe}"),
+        spark, f"sim07_ranked_{nprobe}",
         _gemm_cell_ranked(spark, sf_dir, nprobe, f"sim07cent{nprobe}").persist,
     )
     codes = _gemm_pq_codes(spark, sf_dir)
@@ -2195,7 +2197,7 @@ def sim10_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast tag inside _gemm_cell_ranked (the codebook content is
     # nprobe-independent).
     ranked = swap_live(
-        (id(spark.sparkContext), "sim10_ranked"),
+        spark, "sim10_ranked",
         _gemm_cell_ranked(spark, sf_dir, nprobe, "sim10cent").persist,
     )
     v = emb.select("vec_id", "embedding")
@@ -2472,7 +2474,7 @@ def sim11_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("vec_id"), "lang"
     )
     ranked = swap_live(
-        (id(spark.sparkContext), "sim11_ranked"),
+        spark, "sim11_ranked",
         _gemm_cell_ranked(spark, sf_dir, NPROBE, "sim11cent").persist,
     )
     v = emb.select("vec_id", "embedding")

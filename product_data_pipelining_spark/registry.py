@@ -21,6 +21,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import posture
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -46,15 +48,15 @@ class QuerySpec:
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-# Opt-in prepared-plan cache (SPARK_GRAFT_PLAN_CACHE=1): memoize the
+# Prepared-plan cache (the serving posture, session.serve): memoize the
 # *unresolved-to-analyzed DataFrame* per (session, sf_dir, query). Spark
 # analyzes eagerly on every transformation, so re-declaring a deep plan
 # costs 100-400 ms of analyzer + py4j round trips before a single task
 # runs — the moral equivalent of re-preparing a statement per execution.
 # DataFrames are immutable, so serving the memoized object is
 # semantically identical; the reference's dashboard does the same one
-# level up (Streamlit result caching). Off by default so tests and the
-# driver's correctness gate exercise fresh plan construction.
+# level up (Streamlit result caching). Off in the batch posture so tests
+# and the driver's correctness gate exercise fresh plan construction.
 _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -64,14 +66,13 @@ def register(
     oracle_stage: tuple[str, ...] | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: add a query to the registry."""
-    import os
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
         def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-            if os.environ.get("SPARK_GRAFT_PLAN_CACHE") != "1":
+            if not posture().plan_cache:
                 return fn(spark, sf_dir)
             key = (spark.sparkContext.applicationId, sf_dir, name)
             df = _PLAN_CACHE.get(key)

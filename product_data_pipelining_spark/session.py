@@ -2,7 +2,8 @@
 
 The reference delegates execution to an in-process DuckDB
 (``/root/reference/.dbt/profiles.yml:2-10``); here Catalyst/Tungsten play
-that role. Every knob below is chosen for the 100 TB target:
+that role. Every knob below, the batch posture, is chosen for the 100 TB
+target (:func:`serve` switches the process to the serving posture):
 
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   and dynamic join-strategy demotion replace hand-tuned partition counts.
@@ -23,12 +24,51 @@ from __future__ import annotations
 
 import os
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from typing import Callable, Sequence, TypeVar
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+@dataclass(frozen=True)
+class Posture:
+    """How this process plans and caches (the default is batch)."""
+
+    aqe: bool = True
+    shuffle_partitions: int | None = None  # None: one per core
+    cache_tables: bool = False  # io.load_table's in-memory table cache
+    plan_cache: bool = False  # the registry's prepared-plan cache
+
+
+_posture = Posture()
+
+
+def posture() -> Posture:
+    """What get_spark, io.load_table and the registry follow."""
+    return _posture
+
+
+def serve(sf_dir: str) -> Posture:
+    """Switch this process to the serving posture for ``sf_dir``'s tables.
+
+    Serving is repeated sub-second queries over one warehouse: base
+    tables stay in the table cache, plans are prepared once, and AQE is
+    off: its per-exchange scheduler job and driver replan dominate
+    sub-second queries (11.1 s -> ~3 s on the sf0.1 headline set), while
+    at 100 TB they pay for themselves. Shuffle partitions are sized
+    instead: one per ~64 MiB of ``sf_dir``, at least 8 (also for a dir
+    not written yet), at most DEFAULT_CPUS.
+    """
+    from .io import _table_bytes  # io imports this module
+
+    global _posture
+    parts = max(8, _table_bytes(sf_dir) // (64 * 1024 * 1024))
+    _posture = Posture(False, min(DEFAULT_CPUS, parts), True, True)
+    return _posture
+
 
 T = TypeVar("T")
 
@@ -91,18 +131,6 @@ def get_spark(
     cheap.
     """
     cpus = cpus or DEFAULT_CPUS
-    # Serving profile (SPARK_GRAFT_AQE=0 / SPARK_GRAFT_SHUFFLE_PARTITIONS=n):
-    # AQE's per-stage materialization costs one scheduler job + a driver
-    # replan round-trip per exchange — at cluster scale that latency is
-    # noise against multi-minute stages, but for sub-second interactive
-    # queries over cached small tables it IS the runtime (measured 2-6x
-    # on the sf0.1 headline set). Dashboards/bench therefore run with
-    # static planning and partitions sized to the actual data volume;
-    # batch/cluster paths keep the adaptive defaults below.
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "1") != "0"
-    shuffle_partitions = os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)
-    )
     # One BLAS thread per Python worker: task-level parallelism is
     # Spark's job. Without this every numpy-kernel task spawns an
     # OpenBLAS pool sized to ALL machine cores — at local[32] that is
@@ -123,7 +151,7 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
         # --- adaptive execution: the scale story ---
-        .config("spark.sql.adaptive.enabled", str(aqe).lower())
+        .config("spark.sql.adaptive.enabled", str(_posture.aqe).lower())
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # coalesce respecting parallelism FIRST (the Spark default), not
@@ -136,8 +164,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         # start high, let AQE coalesce down — on a 1000-executor cluster the
         # initial number should be ~2-3x total cores; locally core count
-        # (or the serving profile's explicit count).
-        .config("spark.sql.shuffle.partitions", shuffle_partitions)
+        # (or the serving posture's data-sized count).
+        .config("spark.sql.shuffle.partitions", str(_posture.shuffle_partitions or cpus))
         # 32 MB broadcast threshold (see module docstring): modern-heap
         # sizing so pruned dimension key sets broadcast; AQE can still
         # demote a lying estimate at runtime.

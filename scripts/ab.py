@@ -5,8 +5,9 @@ An arm is a git ref plus optional env settings, ``REF[:K=V[,K=V...]]``;
 the ref ``.`` is the working tree as it stands. Any other ref is
 extracted with ``git archive`` into a temp dir, so ``.git`` is never
 touched. Each arm runs in its own fresh worker process, in the serving
-posture that ``import bench`` sets, with the registry plan cache forced
-off: memoized plans once let an A/B compare an arm with itself.
+posture that ``import bench`` enters (``session.serve``), and builds
+each query's frame once, so the plan cache that posture turns on
+changes nothing that is timed.
 
 Before any timing the run is refused unless, for every query,
 - the two arms' physical plans differ, and
@@ -118,7 +119,7 @@ def _noop(df) -> None:
 def _worker(tree: str, out: str, queries: list[str]) -> None:
     """One arm: plan, dump the outputs, warm up, then time on request."""
     sys.path.insert(0, tree)
-    import bench  # sets the serving posture in os.environ
+    import bench  # enters the serving posture
     from product_data_pipelining_spark.registry import all_queries
     from product_data_pipelining_spark.session import get_spark
 
@@ -157,7 +158,6 @@ def _start(arm: str, ref: str, env: dict, args, tmp: str) -> subprocess.Popen:
     child = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_ONLY"}
     child.update(env)
     child.update(
-        SPARK_GRAFT_PLAN_CACHE="0",
         SPARK_GRAFT_SF_DIR=args.dir,
         # executor-side Python workers import from the arm's tree too
         PYTHONPATH=os.pathsep.join(filter(None, [tree, child.get("PYTHONPATH")])),

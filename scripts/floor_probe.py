@@ -55,9 +55,8 @@ SF_DIRS = {
 }
 
 _CHILD = r"""
-import json, os, sys, time
+import json, sys, time
 sys.path.insert(0, {repo!r})
-os.environ.setdefault("SPARK_GRAFT_AQE", "0")
 import duckdb
 from product_data_pipelining_spark.session import get_spark
 from product_data_pipelining_spark.registry import all_queries
@@ -66,7 +65,8 @@ from product_data_pipelining_spark.io import TPCH_TABLES
 
 name, sf_dir, repeats = {name!r}, {sf_dir!r}, {repeats}
 spec = all_queries()[name]
-spark = get_spark(app_name=f"floor-{{name}}", cpus=32)
+spark = get_spark(app_name=f"floor-{{name}}", cpus=32,
+                  extra_conf={{"spark.sql.adaptive.enabled": "false"}})
 df = spec.fn(spark, sf_dir)
 df.write.format("noop").mode("overwrite").save()  # warmup
 con = duckdb.connect()

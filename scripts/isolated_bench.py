@@ -42,7 +42,7 @@ def main() -> None:
     args = ap.parse_args()
 
     sys.path.insert(0, str(REPO))
-    from bench import HEADLINE
+    from bench import HEADLINE, SF_DIR
 
     names = (
         [q.strip() for q in args.queries.split(",") if q.strip()]
@@ -54,7 +54,7 @@ def main() -> None:
         "queries": {},
         "queries_rel_spread": {},
         "duckdb_queries": {},
-        "sf": os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+        "sf": SF_DIR,
         "isolation": "one fresh JVM + DuckDB per query",
     }
     for name in names:

@@ -277,9 +277,7 @@ def run_correctness(sf_dir: str, stage_dir: str) -> dict:
     with open(os.path.join(stage_dir, "meta.json")) as f:
         meta = json.load(f)
     specs = all_queries()
-    spark = get_spark(app_name="pdp-scale-check", cpus=int(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
-    ))
+    spark = get_spark(app_name="pdp-scale-check")
     con = duckdb.connect()  # only reads staged parquet — tiny footprint
 
     results: dict[str, str] = {}

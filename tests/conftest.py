@@ -42,3 +42,21 @@ def ddb(sf_dir):
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def serving_posture(sf_dir):
+    """Run a test in the serving posture (``session.serve``); afterwards
+    restore the posture it replaced and drop the table and plan cache
+    entries the test filled, so no later test in this shared session
+    runs cached."""
+    from product_data_pipelining_spark import io, registry, session
+
+    saved = session.posture()
+    tables, plans = set(io._TABLE_CACHE), set(registry._PLAN_CACHE)
+    yield session.serve(sf_dir)
+    session._posture = saved
+    for key in set(io._TABLE_CACHE) - tables:
+        io._TABLE_CACHE.pop(key).unpersist()
+    for key in set(registry._PLAN_CACHE) - plans:
+        del registry._PLAN_CACHE[key]

@@ -143,3 +143,48 @@ def test_rows_only_queries_run(name, spark, par_sf_dir):
     df = spec.fn(spark, par_sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+@pytest.fixture(scope="module")
+def small_codebook_dir(spark, tmp_path_factory):
+    """A generated sf0.01 dir: 200 embeddings, so only 29 rows fall in
+    the PQ seed range and every codebook has K < PQ_K entries."""
+    from product_data_pipelining_spark.sources.generator import generate_scale
+
+    out = str(tmp_path_factory.mktemp("pq") / "sf0.01")
+    generate_scale(spark, out, 0.01)
+    return out
+
+
+@pytest.mark.parametrize(
+    "name", ["sim06_pq_adc", "sim07_ann_ivfpq", "sim08_ann_ivfpq_rerank"]
+)
+def test_pq_parity_below_a_full_codebook(name, spark, small_codebook_dir):
+    """With a short codebook (K < PQ_K seeds) the encode kernel sizes its
+    distance grid by K, and every ADC stage finds code c of subspace m
+    at the LUT slot its layout gives (m*K + c packed, m*PQ_K + c in the
+    kernel's strided LUT), so the scores equal the oracle's."""
+    from product_data_pipelining_spark.checks.oracle_compare import (
+        duck_view_sql,
+        frames_match,
+    )
+    from product_data_pipelining_spark.operators.similarity import (
+        PQ_K,
+        PQ_STRIDE,
+    )
+
+    con = duckdb.connect()
+    for t in TPCH_TABLES:
+        con.execute(duck_view_sql(small_codebook_dir, t))
+    seeds = con.execute(
+        f"SELECT count(*) FROM embeddings "
+        f"WHERE vec_id % {PQ_STRIDE} = 3 AND vec_id < {PQ_STRIDE * PQ_K}"
+    ).fetchone()[0]
+    assert 0 < seeds < PQ_K, seeds
+    spec = QUERIES[name]
+    got = spec.fn(spark, small_codebook_dir).toPandas()
+    want = con.execute(spec.oracle).df()
+    con.close()
+    assert len(got) > 0
+    ok, why = frames_match(got, want)
+    assert ok, f"{name}: {why}"

@@ -321,7 +321,7 @@ def test_q11_total_branch_reuses_grouped_exchange(spark, sf_dir):
         spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
 
 
-def test_clustered_cache_elides_window_exchange(spark, sf_dir):
+def test_clustered_cache_elides_window_exchange(spark, sf_dir, serving_posture):
     """With the serving cache on, events is hash-clustered on user_id,
     so sessionization's windows need no further exchange beyond the
     cached layout itself.
@@ -331,14 +331,9 @@ def test_clustered_cache_elides_window_exchange(spark, sf_dir):
     partitioning the outer planner cannot see, so it conservatively
     re-exchanges — a known AQE-over-cache limitation, not a property of
     the serving layout. bench.py times with AQE off, where the r12
-    profile shows the window stage reusing the clustered layout."""
-    import os
-
-    from product_data_pipelining_spark import io as io_mod
-
+    profile shows the window stage reusing the clustered layout. The
+    shared session already exists, so AQE is switched off on it here."""
     saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
-    io_mod._TABLE_CACHE.clear()
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         df = QUERIES["ev02_sessionize"].fn(spark, sf_dir)
@@ -347,8 +342,6 @@ def test_clustered_cache_elides_window_exchange(spark, sf_dir):
         assert exchange_count(df) <= 1
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-        os.environ.pop("SPARK_GRAFT_CACHE_TABLES", None)
-        io_mod._TABLE_CACHE.clear()
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):

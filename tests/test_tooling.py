@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 from unittest import mock
 
 import pandas as pd
@@ -65,8 +66,11 @@ def test_ab_refuses_to_time_differing_outputs():
     ab.preflight(plans, {"a": {"q": got}, "b": {"q": got.iloc[::-1]}})
 
 
-def test_bench_mirrors_only_a_full_headline_run_at_the_default_sf(tmp_path):
-    # importing bench sets the serving posture in os.environ; undo it
+def test_bench_mirrors_only_a_full_headline_run_at_the_default_sf(
+    tmp_path, serving_posture
+):
+    # importing bench enters the serving posture, which the fixture
+    # leaves; SPARK_GRAFT_ONLY would restrict or reject its HEADLINE
     with mock.patch.dict(os.environ):
         os.environ.pop("SPARK_GRAFT_ONLY", None)
         import bench
@@ -109,12 +113,18 @@ def test_swap_live_releases_the_replaced_object_once_and_first():
 
         return build
 
-    key, other = ("ctx", "tag"), ("ctx", "other_tag")
+    def context(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    spark, restarted = context("app-1"), context("app-2")
+    key, other, fresh = ("app-1", "tag"), ("app-1", "other_tag"), ("app-2", "tag")
     try:
-        assert io.swap_live(key, make("old")).name == "old"
-        io.swap_live(other, make("bystander"))
-        io.swap_live(key, make("new"))
-        io.swap_live(key, make("newest"))
+        assert io.swap_live(spark, "tag", make("old")).name == "old"
+        io.swap_live(spark, "other_tag", make("bystander"))
+        io.swap_live(spark, "tag", make("new"))
+        io.swap_live(spark, "tag", make("newest"))
+        # a restarted context never releases what its predecessor holds
+        io.swap_live(restarted, "tag", make("restarted"))
         # each replaced object is released once, non-blocking, BEFORE its
         # successor is made (a same-plan frame persisted first would reuse
         # the cache entry the release then drops); other keys stay live
@@ -125,9 +135,11 @@ def test_swap_live_releases_the_replaced_object_once_and_first():
             ("make", "new"),
             ("unpersist", "new", False),
             ("make", "newest"),
+            ("make", "restarted"),
         ]
         assert io._LIVE[key].name == "newest"
         assert io._LIVE[other].name == "bystander"
+        assert io._LIVE[fresh].name == "restarted"
     finally:
-        io._LIVE.pop(key, None)
-        io._LIVE.pop(other, None)
+        for k in (key, other, fresh):
+            io._LIVE.pop(k, None)
